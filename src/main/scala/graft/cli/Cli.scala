@@ -14,7 +14,18 @@ import org.apache.spark.sql.types.StructType
   * Warehouse layout (relative to --warehouse, default ./warehouse):
   *   hospitals/ hospital_locations/ hospital_bed_information/
   *   hospital_quality_information/
-  * Rejects go under --rejects (default ./rejects)/{hhs,quality}.
+  * Rejects go under --rejects (default ./rejects)/{hhs,quality}; each
+  * load replaces its reject directory.
+  *
+  * A load is all or nothing (reference: load_hhs.py:148 commits one
+  * transaction). It parses its CSV once, writes every table and its
+  * reject CSV under `<warehouse>/_staging/<load-id>/`, and moves them
+  * into the live directories only after every write has succeeded. If
+  * anything fails, the staging directory is deleted, the live tables and
+  * reject directory are as they were, and the error propagates (the
+  * mains exit nonzero). A re-run of a committed load adds no rows: the
+  * loaders anti-join against the warehouse. See
+  * [[graft.warehouse.LoadWriter]].
   */
 object Cli {
 

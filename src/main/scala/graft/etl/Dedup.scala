@@ -39,8 +39,10 @@ import org.apache.spark.sql.functions._
   *  - `antiJoinExisting` plans as broadcast-hash anti-join when the
   *    existing-keys side is small (e.g. a dimension being topped up) and
   *    shuffled sort-merge otherwise — Catalyst/AQE decides from stats.
-  *    We deliberately project the existing side to just its key columns
-  *    so the broadcast/shuffle payload is minimal.
+  *    The existing side is projected to just its key columns, and NOT
+  *    de-duplicated: a left-anti or left-semi join returns the same rows
+  *    whatever duplicates sit on its build side, and a `distinct()` there
+  *    costs a shuffle (one more job under AQE) before every broadcast.
   */
 object Dedup {
 
@@ -109,12 +111,12 @@ object Dedup {
     * warehouse (reference: load_quality.py:122-126 set-based IN probe).
     * Existing side is pruned to key columns before the anti-join. */
   def antiJoinExisting(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_anti")
+    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*), keys, "left_anti")
 
   /** The rows REMOVED by cross-load dedup (the reference's reject channel
     * for duplicates, load_quality.py:124). Semi-join = set semantics; the
     * reference's duplicate-index quirk (same row emitted twice,
     * load_hhs.py:82-99) is a documented divergence (SURVEY.md §7.4.7). */
   def duplicatesOfExisting(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_semi")
+    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*), keys, "left_semi")
 }

@@ -31,19 +31,29 @@ object Validation {
   /** V3 — NOT NULL constraint (reference: ipynb cell-0 hospital_name). */
   def notNull(c: Column): Column = c.isNotNull
 
-  /** Split `df` into (valid, rejects). A row is valid iff every rule
-    * passes; rejects get `reject_reason` = first failing rule's name. */
-  def split(df: DataFrame, rules: Seq[Rule]): (DataFrame, DataFrame) = {
+  /** `df` plus a `reject_reason` column: the first failing rule's name,
+    * null when every rule passes. NULL rule results count as failures
+    * (SQL three-valued logic would silently drop them from BOTH sides
+    * of the split otherwise). This is the frame a load computes once
+    * and feeds to every sink. */
+  def tag(df: DataFrame, rules: Seq[Rule]): DataFrame = {
     require(rules.nonEmpty, "validation requires at least one rule")
-    val allPass = rules.map(_.passes).reduce(_ && _)
     val firstFailure = rules.reverse.foldLeft(lit(null).cast(StringType)) {
       case (acc, Rule(name, passes)) => when(!coalesce(passes, lit(false)), lit(name)).otherwise(acc)
     }
-    // NULL rule results count as failures (SQL three-valued logic would
-    // silently drop them from BOTH sides otherwise).
-    val validPred = coalesce(allPass, lit(false))
-    val valid = df.filter(validPred)
-    val rejects = df.filter(!validPred).withColumn("reject_reason", firstFailure)
-    (valid, rejects)
+    df.withColumn(ReasonCol, firstFailure)
   }
+
+  /** (valid, rejects) of a [[tag]]ged frame: valid rows lose the reason
+    * column, rejects keep it. */
+  def partition(tagged: DataFrame): (DataFrame, DataFrame) =
+    (tagged.filter(col(ReasonCol).isNull).drop(ReasonCol),
+     tagged.filter(col(ReasonCol).isNotNull))
+
+  /** Split `df` into (valid, rejects). A row is valid iff every rule
+    * passes; rejects get `reject_reason` = first failing rule's name. */
+  def split(df: DataFrame, rules: Seq[Rule]): (DataFrame, DataFrame) =
+    partition(tag(df, rules))
+
+  private val ReasonCol = "reject_reason"
 }

@@ -9,19 +9,25 @@ import org.apache.spark.sql.types._
   *
   * The reference does per-row work — up to 6 network round-trips per row
   * (3 dup-probe SELECTs + 3 INSERTs, load_hhs.py:75-137). This pipeline is
-  * ONE Spark job: scan → clean → validate-split → dedup (within-batch
-  * first-wins + anti-join vs warehouse) → three table projections + a
-  * reject frame. Stage boundaries only at the dedup shuffles; at 100 TB
+  * set-based: scan → clean → validate → dedup (within-batch first-wins +
+  * anti-join vs warehouse) → three table projections + a reject frame.
+  * [[load]] builds all of it lazily from ONE scanned-and-validated frame;
+  * [[write]] parses the CSV once (the shared [[LoadWriter]] persists that
+  * frame while the sinks run) and publishes the four sinks together or
+  * not at all. Stage boundaries only at the dedup shuffles; at 100 TB
   * the anti-join's existing-keys side is key-pruned and broadcastable
   * when the warehouse key set fits, otherwise a shuffled anti-join.
   */
 object HhsPipeline {
 
+  /** The sink frames of one load, all derived from `validated`: the
+    * cleaned CSV rows tagged with their `reject_reason` (null = valid). */
   final case class Result(
       hospitals: DataFrame,
       locations: DataFrame,
       bedInfo: DataFrame,
-      rejects: DataFrame)
+      rejects: DataFrame,
+      validated: DataFrame)
 
   /** Read a raw HHS CSV string-preserving, with a file-order index so
     * first-occurrence-wins dedup is deterministic in a distributed read.
@@ -55,8 +61,8 @@ object HhsPipeline {
     * DataFrames on first load). */
   def load(spark: SparkSession, csvPath: String,
            existingHospitals: DataFrame, existingBedInfo: DataFrame): Result = {
-    val cleaned = clean(readRaw(spark, csvPath))
-    val (valid, rejects) = Validation.split(cleaned, validationRules)
+    val validated = Validation.tag(clean(readRaw(spark, csvPath)), validationRules)
+    val (valid, rejects) = Validation.partition(validated)
 
     // Hospitals + Locations: key = hospital_pk, first occurrence in file
     // wins (load_hhs.py:75,89), then drop keys already in the warehouse.
@@ -80,18 +86,18 @@ object HhsPipeline {
           Schemas.hhsMetricColumns.map(col)).toIndexedSeq: _*),
       existingBedInfo, Seq("hospital_fk", "collection_week"))
 
-    Result(hospitals, locations, bedInfo, rejects.drop("__file_order"))
+    Result(hospitals, locations, bedInfo, rejects.drop("__file_order"), validated)
   }
 
   /** Parquet sinks: bed info partitioned by collection_week so every
-    * date-filtered report gets partition pruning (SURVEY §4). Job-atomic
-    * per directory — the Spark analogue of the reference's whole-load
-    * transaction (load_hhs.py:148). */
-  def write(r: Result, warehouseDir: String, rejectDir: String): Unit = {
-    r.hospitals.write.mode("append").parquet(s"$warehouseDir/hospitals")
-    r.locations.write.mode("append").parquet(s"$warehouseDir/hospital_locations")
-    r.bedInfo.write.mode("append").partitionBy("collection_week")
-      .parquet(s"$warehouseDir/hospital_bed_information")
-    r.rejects.write.mode("overwrite").option("header", "true").csv(s"$rejectDir/hhs")
-  }
+    * date-filtered report gets partition pruning (SURVEY §4). The three
+    * tables and the reject CSV commit together through [[LoadWriter]] —
+    * the analogue of the reference's whole-load transaction
+    * (load_hhs.py:148). */
+  def write(r: Result, warehouseDir: String, rejectDir: String): Unit =
+    LoadWriter.write(r.validated, warehouseDir, Seq(
+      LoadWriter.Table("hospitals", r.hospitals),
+      LoadWriter.Table("hospital_locations", r.locations),
+      LoadWriter.Table("hospital_bed_information", r.bedInfo, Seq("collection_week"))),
+      r.rejects, s"$rejectDir/hhs")
 }

@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   */
 object QualityPipeline {
 
-  final case class Result(quality: DataFrame, rejects: DataFrame)
+  /** The sink frames of one load, both derived from `validated`: the
+    * cleaned CSV rows tagged with their `reject_reason` (null = valid). */
+  final case class Result(quality: DataFrame, rejects: DataFrame, validated: DataFrame)
 
   /** S2 — projected scan: only the 5 consumed columns reach the reader
     * (reference: load_quality.py:98-99 usecols). */
@@ -51,8 +53,8 @@ object QualityPipeline {
 
   def load(spark: SparkSession, csvPath: String, dataDate: String,
            existingQuality: DataFrame): Result = {
-    val cleaned = clean(readRaw(spark, csvPath), dataDate)
-    val (valid, invalid) = Validation.split(cleaned, validationRules)
+    val validated = Validation.tag(clean(readRaw(spark, csvPath), dataDate), validationRules)
+    val (valid, invalid) = Validation.partition(validated)
     // D3 — set-based dedup vs same-date warehouse snapshot
     // (load_quality.py:122-126): existing side filtered to data_date then
     // key-pruned; Catalyst broadcasts it when small.
@@ -63,12 +65,13 @@ object QualityPipeline {
     val quality = fresh.select(
       col("facility_id"), col("hospital_overall_rating"), col("emergency_services"),
       col("hospital_type"), col("hospital_ownership"), col("data_date"))
-    Result(quality, invalid.unionByName(dups, allowMissingColumns = true))
+    Result(quality, invalid.unionByName(dups, allowMissingColumns = true), validated)
   }
 
-  def write(r: Result, warehouseDir: String, rejectDir: String): Unit = {
-    r.quality.write.mode("append").partitionBy("data_date")
-      .parquet(s"$warehouseDir/hospital_quality_information")
-    r.rejects.write.mode("overwrite").option("header", "true").csv(s"$rejectDir/quality")
-  }
+  /** One scan of the CSV; the table and the reject CSV commit together
+    * through [[LoadWriter]]. */
+  def write(r: Result, warehouseDir: String, rejectDir: String): Unit =
+    LoadWriter.write(r.validated, warehouseDir, Seq(
+      LoadWriter.Table("hospital_quality_information", r.quality, Seq("data_date"))),
+      r.rejects, s"$rejectDir/quality")
 }
