@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare. A query that throws is logged
+  * and the rest still dump; once oracle_sql.json is written, the names of
+  * the failed queries are printed and the run exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -29,12 +31,14 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith)) }
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val futures = selected.map { case (name, fn) =>
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed.add(name)
         }
       }
     }
@@ -59,5 +63,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failed.isEmpty) {
+      val names = failed.toArray(Array.empty[String]).sorted
+      System.err.println(s"[verify] ${names.length} queries failed: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

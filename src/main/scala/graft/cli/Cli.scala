@@ -1,6 +1,7 @@
 package graft.cli
 
 import graft.warehouse.{HhsPipeline, QualityPipeline, Schemas}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -40,14 +41,18 @@ object Cli {
 
   /** Current warehouse table, or an empty frame with the canonical schema
     * on first load (the reference assumes pre-created tables; a missing
-    * directory here is the "fresh warehouse" state). */
+    * directory here is the "fresh warehouse" state). Existence is checked
+    * on the path's Hadoop file system, the one [[graft.warehouse.LoadWriter]]
+    * writes through, so a URI warehouse (`file:///…`, `hdfs://…`) is seen. */
   private[cli] def readOrEmpty(spark: SparkSession, path: String,
-                               schema: StructType): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+                               schema: StructType): DataFrame = {
+    val p = new Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       spark.read.schema(schema).parquet(path)
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   /** Flag parsing for `--warehouse <dir> --rejects <dir>` suffixes.
     * Unknown flags and stray arguments are hard errors: a typo like

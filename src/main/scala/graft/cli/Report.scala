@@ -1,8 +1,13 @@
 package graft.cli
 
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors, TimeUnit}
+
+import scala.util.{Failure, Try}
+
 import graft.warehouse.{Reports, Schemas}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** The reference dashboard's report page as a CLI (Reporting.py:275-281
   * renders the same query sequence through Streamlit selectboxes +
@@ -15,7 +20,10 @@ import org.apache.spark.sql.functions._
   * Each section is one [[graft.warehouse.Reports]] DataFrame pipeline;
   * the driver collects only display-sized results (weeks, states,
   * ratings — the reports aggregate before they return), so rendering
-  * cost is independent of warehouse size.
+  * cost is independent of warehouse size. The reference runs its queries
+  * one after another only because a Streamlit script reads from one
+  * connection; [[render]] runs them concurrently and prints them in the
+  * reference's order.
   */
 object Report {
 
@@ -58,7 +66,23 @@ object Report {
   /** The full report page over a parquet warehouse. Parameters default
     * from the data like the dashboard's selectboxes: `week` = most
     * recent collection_week, `dataDate` = most recent quality load,
-    * `ownership` = the modal ownership at that date. */
+    * `ownership` = the modal ownership at that date.
+    *
+    * The page is 12 Spark actions: the three defaults and the nine
+    * tables. Each starts as soon as the values it needs are known:
+    *  - `week`, `dataDate`, records by week and bed use by rating at once;
+    *  - `ownership`, emergency hospitals by state and rating by state
+    *    after `dataDate`;
+    *  - the four other bed-information tables after `week`;
+    *  - bed use by ownership after `ownership`.
+    * Each action runs on its own thread of a pool this call owns, through
+    * `SQLExecution.withThreadLocalCaptured`, so its jobs carry the
+    * caller's job group, local properties, SQL conf and active session.
+    * The page is assembled in its fixed section order, so the text does
+    * not depend on which action finishes first. If any action fails,
+    * `render` waits for every other one to finish, then rethrows the first
+    * failure in page order (defaults first, then the sections); no Spark
+    * job outlives the call. */
   def render(spark: SparkSession, warehouseDir: String,
              week: Option[String] = None, dataDate: Option[String] = None,
              ownership: Option[String] = None, maxRows: Int = 100): String = {
@@ -73,50 +97,79 @@ object Report {
       spark, s"$warehouseDir/hospital_quality_information",
       Schemas.hospitalQualityInformation)
 
-    // selectbox defaults: single-row scalar aggregates, not data pulls
-    val wk = week.getOrElse {
-      val r = bedInfo.agg(max("collection_week")).head()
-      require(!r.isNullAt(0), s"$warehouseDir has no bed information: " +
-        "load HHS data first or pass --week explicitly")
-      r.get(0).toString
-    }
-    val dd = dataDate.getOrElse {
-      val r = quality.agg(max("data_date")).head()
-      require(!r.isNullAt(0), s"$warehouseDir has no quality information: " +
-        "load quality data first or pass --data-date explicitly")
-      r.get(0).toString
-    }
-    val own = ownership.getOrElse {
-      quality.filter(col("data_date") === lit(dd))
-        .groupBy("hospital_ownership").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("hospital_ownership")).limit(1)
-        .head().getString(0)
-    }
+    val pool = Executors.newFixedThreadPool(Actions, (r: Runnable) => {
+      val t = new Thread(r, "graft-report")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      // every action is submitted at once and blocks on the values it
+      // needs; with a thread per action none waits for a free thread
+      def action[T](body: => T): CompletableFuture[T] =
+        GraftSqlBridge.withThreadLocalCaptured(spark, pool)(body)
+      def table(df: => DataFrame): CompletableFuture[String] =
+        action(formatTable(df, maxRows))
 
-    val sections = Seq(
-      s"Records loaded for week $wk (Reporting.py:29-33)" ->
-        Reports.recordsForWeek(bedInfo, wk),
-      "Records loaded by week (Reporting.py:36-41)" ->
-        Reports.recordsByWeek(bedInfo),
-      s"Bed availability and use, week $wk (Reporting.py:59-67)" ->
-        Reports.bedSumsForWeek(bedInfo, wk),
-      s"Bed availability and use, 4 most recent weeks <= $wk (Reporting.py:84-106)" ->
-        Reports.bedSumsRecentWeeks(bedInfo, wk),
-      "Fraction of beds in use by hospital quality rating (Reporting.py:109-135)" ->
-        Reports.bedUseByRating(quality, bedInfo),
-      s"All cases vs covid cases by week through $wk (Reporting.py:144-153)" ->
-        Reports.casesByWeek(bedInfo, wk),
-      s"Emergency-service hospitals by state, top 20, as of $dd (Reporting.py:180-196)" ->
-        Reports.emergencyHospitalsByState(quality, hospitals, locations, dd),
-      s"Fraction of beds in use by week, ownership = $own (Reporting.py:200-224)" ->
-        Reports.bedUseByOwnership(quality, bedInfo, own),
-      s"Mean overall rating by state, top and bottom 10, as of $dd (Reporting.py:240-263)" ->
-        Reports.ratingByStateTopBottom(quality, locations, dd))
+      // selectbox defaults: single-row scalar aggregates, not data pulls
+      val wk = action(week.getOrElse {
+        val r = bedInfo.agg(max("collection_week")).head()
+        require(!r.isNullAt(0), s"$warehouseDir has no bed information: " +
+          "load HHS data first or pass --week explicitly")
+        r.get(0).toString
+      })
+      val dd = action(dataDate.getOrElse {
+        val r = quality.agg(max("data_date")).head()
+        require(!r.isNullAt(0), s"$warehouseDir has no quality information: " +
+          "load quality data first or pass --data-date explicitly")
+        r.get(0).toString
+      })
+      val own = action(ownership.getOrElse {
+        quality.filter(col("data_date") === lit(dd.join()))
+          .groupBy("hospital_ownership").agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("hospital_ownership")).limit(1)
+          .head().getString(0)
+      })
 
-    sections.map { case (title, df) =>
-      s"== $title ==\n${formatTable(df, maxRows)}"
-    }.mkString(s"graft report — warehouse: $warehouseDir\n\n", "\n\n", "\n")
+      val tables = Seq(
+        table(Reports.recordsForWeek(bedInfo, wk.join())),
+        table(Reports.recordsByWeek(bedInfo)),
+        table(Reports.bedSumsForWeek(bedInfo, wk.join())),
+        table(Reports.bedSumsRecentWeeks(bedInfo, wk.join())),
+        table(Reports.bedUseByRating(quality, bedInfo)),
+        table(Reports.casesByWeek(bedInfo, wk.join())),
+        table(Reports.emergencyHospitalsByState(quality, hospitals, locations, dd.join())),
+        table(Reports.bedUseByOwnership(quality, bedInfo, own.join())),
+        table(Reports.ratingByStateTopBottom(quality, locations, dd.join())))
+
+      // wait for every action before rethrowing any failure
+      (Seq(wk, dd, own) ++ tables).map(f => Try(f.join())).collectFirst {
+        case Failure(e: CompletionException) if e.getCause != null => e.getCause
+        case Failure(e) => e
+      }.foreach(e => throw e)
+
+      val (w, d, o) = (wk.join(), dd.join(), own.join())
+      val titles = Seq(
+        s"Records loaded for week $w (Reporting.py:29-33)",
+        "Records loaded by week (Reporting.py:36-41)",
+        s"Bed availability and use, week $w (Reporting.py:59-67)",
+        s"Bed availability and use, 4 most recent weeks <= $w (Reporting.py:84-106)",
+        "Fraction of beds in use by hospital quality rating (Reporting.py:109-135)",
+        s"All cases vs covid cases by week through $w (Reporting.py:144-153)",
+        s"Emergency-service hospitals by state, top 20, as of $d (Reporting.py:180-196)",
+        s"Fraction of beds in use by week, ownership = $o (Reporting.py:200-224)",
+        s"Mean overall rating by state, top and bottom 10, as of $d (Reporting.py:240-263)")
+      titles.zip(tables).map { case (title, t) =>
+        s"== $title ==\n${t.join()}"
+      }.mkString(s"graft report — warehouse: $warehouseDir\n\n", "\n\n", "\n")
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
+
+  /** Spark actions on the report page: three selectbox defaults and nine
+    * tables, one pool thread each. */
+  private val Actions = 12
 
   private def flags(rest: Seq[String]): Map[String, String] = {
     val known = Set("--warehouse", "--week", "--data-date", "--ownership")

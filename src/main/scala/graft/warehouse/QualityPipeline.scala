@@ -22,12 +22,20 @@ object QualityPipeline {
   final case class Result(quality: DataFrame, rejects: DataFrame, validated: DataFrame)
 
   /** S2 — projected scan: only the 5 consumed columns reach the reader
-    * (reference: load_quality.py:98-99 usecols). */
-  def readRaw(spark: SparkSession, csvPath: String): DataFrame =
-    spark.read
+    * (reference: load_quality.py:98-99 usecols). A file whose header lacks
+    * any of them (a wrong file, or an empty one) fails here, naming the
+    * file and the missing columns. */
+  def readRaw(spark: SparkSession, csvPath: String): DataFrame = {
+    val raw = spark.read
       .option("header", "true")
       .csv(csvPath)
-      .select(Schemas.qualityRawCsv.fieldNames.toIndexedSeq.map(col): _*)
+    // case-insensitive, as Spark resolves the select below
+    val header = raw.columns.map(_.toLowerCase).toSet
+    val missing = Schemas.qualityRawCsv.fieldNames.filterNot(c => header(c.toLowerCase))
+    require(missing.isEmpty, s"$csvPath is not a CMS hospital quality CSV: " +
+      s"its header lacks ${missing.map(c => s"'$c'").mkString(", ")}")
+    raw.select(Schemas.qualityRawCsv.fieldNames.toIndexedSeq.map(col): _*)
+  }
 
   /** P2 rename, P6 'Not Available'→"0", P7 Yes/No→bool, P8 cast,
     * P3 literal data_date (reference: load_quality.py:102-107). */

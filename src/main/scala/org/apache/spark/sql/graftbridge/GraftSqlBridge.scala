@@ -4,10 +4,13 @@
  * internals are reimplemented here. */
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
 
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -69,4 +72,13 @@ object GraftSqlBridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(name, info, builder)
+
+  /** Run `body` on `pool` with the calling thread's Spark context: its
+    * local properties (job group included), active session (and so the
+    * session's SQL conf) and job artifact state — the capture Spark's own
+    * broadcast and subquery threads use. */
+  def withThreadLocalCaptured[T](spark: SparkSession, pool: ExecutorService)(
+      body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
 }

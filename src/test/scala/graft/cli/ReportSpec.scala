@@ -1,13 +1,23 @@
 package graft.cli
 
-import graft.SparkSpec
-import graft.warehouse.Schemas
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import graft.SparkSpec
+import graft.warehouse.{Reports, Schemas}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.sql.types.StructType
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** End-to-end proof for the third reference entry point: load fixture
   * CSVs through the CLI pipelines into a warehouse, then render the
-  * dashboard page from it (Reporting.py:275-281's sequential report,
-  * text tables instead of Streamlit widgets). */
+  * dashboard page from it (Reporting.py:275-281's report, text tables
+  * instead of Streamlit widgets). */
 class ReportSpec extends SparkSpec {
 
   private lazy val dir = Files.createTempDirectory(
@@ -38,6 +48,54 @@ class ReportSpec extends SparkSpec {
     Cli.runHhs(spark, hhsCsv, warehouseDir, s"$dir/rejects/hhs")
     Cli.runQuality(spark, "2023-01-20", qCsv, warehouseDir, s"$dir/rejects/quality")
   }
+
+  /** The page as the reference builds it: defaults, then each section's
+    * [[Reports]] frame through [[Report.formatTable]], one action after
+    * another in section order. */
+  private def sequentialPage(wh: String, week: Option[String] = None,
+                             dataDate: Option[String] = None,
+                             ownership: Option[String] = None): String = {
+    def read(table: String, schema: StructType) = spark.read.schema(schema).parquet(s"$wh/$table")
+    val hospitals = read("hospitals", Schemas.hospitals)
+    val locations = read("hospital_locations", Schemas.hospitalLocations)
+    val bedInfo = read("hospital_bed_information", Schemas.hospitalBedInformation)
+    val quality = read("hospital_quality_information", Schemas.hospitalQualityInformation)
+    val wk = week.getOrElse(bedInfo.agg(max("collection_week")).head().get(0).toString)
+    val dd = dataDate.getOrElse(quality.agg(max("data_date")).head().get(0).toString)
+    val own = ownership.getOrElse(quality.filter(col("data_date") === lit(dd))
+      .groupBy("hospital_ownership").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("hospital_ownership")).limit(1).head().getString(0))
+    Seq(
+      s"Records loaded for week $wk (Reporting.py:29-33)" -> Reports.recordsForWeek(bedInfo, wk),
+      "Records loaded by week (Reporting.py:36-41)" -> Reports.recordsByWeek(bedInfo),
+      s"Bed availability and use, week $wk (Reporting.py:59-67)" -> Reports.bedSumsForWeek(bedInfo, wk),
+      s"Bed availability and use, 4 most recent weeks <= $wk (Reporting.py:84-106)" ->
+        Reports.bedSumsRecentWeeks(bedInfo, wk),
+      "Fraction of beds in use by hospital quality rating (Reporting.py:109-135)" ->
+        Reports.bedUseByRating(quality, bedInfo),
+      s"All cases vs covid cases by week through $wk (Reporting.py:144-153)" ->
+        Reports.casesByWeek(bedInfo, wk),
+      s"Emergency-service hospitals by state, top 20, as of $dd (Reporting.py:180-196)" ->
+        Reports.emergencyHospitalsByState(quality, hospitals, locations, dd),
+      s"Fraction of beds in use by week, ownership = $own (Reporting.py:200-224)" ->
+        Reports.bedUseByOwnership(quality, bedInfo, own),
+      s"Mean overall rating by state, top and bottom 10, as of $dd (Reporting.py:240-263)" ->
+        Reports.ratingByStateTopBottom(quality, locations, dd)
+    ).map { case (title, df) => s"== $title ==\n${Report.formatTable(df)}" }
+      .mkString(s"graft report — warehouse: $wh\n\n", "\n\n", "\n")
+  }
+
+  /** Jobs started, by job group ("" for none). */
+  private final class JobGroups extends SparkListener {
+    val jobs = new ConcurrentHashMap[String, Integer]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      jobs.merge(g.getOrElse(""), 1, (a: Integer, b: Integer) => a + b)
+    }
+  }
+
+  private def renderThreadsAlive: Boolean =
+    Thread.getAllStackTraces.keySet.asScala.exists(t => t.getName == "graft-report" && t.isAlive)
 
   test("report page renders every dashboard section from the warehouse") {
     loaded
@@ -70,6 +128,34 @@ class ReportSpec extends SparkSpec {
     assert(page.contains("ownership = Proprietary"))
   }
 
+  test("the concurrent page equals the sequential reference, with or without overrides") {
+    loaded
+    assert(Report.render(spark, warehouseDir) == sequentialPage(warehouseDir))
+    assert(Report.render(spark, warehouseDir, week = Some("2023-01-06"),
+      ownership = Some("Proprietary")) ==
+      sequentialPage(warehouseDir, week = Some("2023-01-06"), ownership = Some("Proprietary")))
+  }
+
+  test("every job of a render carries the caller's job group, as many as the sequential page runs") {
+    loaded
+    Report.render(spark, warehouseDir) // warm: both sides below plan the same queries
+    val groups = new JobGroups
+    spark.sparkContext.addSparkListener(groups)
+    try {
+      for (g <- Seq("sequential", "render")) {
+        spark.sparkContext.setJobGroup(g, g)
+        try if (g == "render") Report.render(spark, warehouseDir) else sequentialPage(warehouseDir)
+        finally spark.sparkContext.clearJobGroup()
+      }
+      GraftSqlBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(groups)
+    // a worker thread that does not carry the caller's local properties
+    // (a shared pool, plain Futures) starts its jobs with no group
+    val jobs = groups.jobs.asScala.map { case (g, n) => g -> n.intValue }.toMap
+    assert(jobs.keySet == Set("sequential", "render"), s"jobs by group: $jobs")
+    assert(jobs("render") == jobs("sequential"), s"jobs by group: $jobs")
+  }
+
   test("formatTable aligns, formats NULL, and truncates at maxRows") {
     import spark.implicits._
     val df = Seq((1L, Option(2.5), "x"), (2L, None, "longer"))
@@ -88,5 +174,9 @@ class ReportSpec extends SparkSpec {
       Report.render(spark, s"$dir/nowhere")
     }
     assert(e.getMessage.contains("load HHS data first"))
+    // the other actions ran to the end before the throw, and the pool is gone
+    GraftSqlBridge.drainListenerBus(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    eventually(timeout(5.seconds))(assert(!renderThreadsAlive))
   }
 }

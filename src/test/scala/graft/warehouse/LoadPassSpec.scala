@@ -45,13 +45,19 @@ class LoadPassSpec extends SparkSpec {
     (p.toString, rows.size.toLong)
   }
 
-  private val tables = Seq("hospitals", "hospital_locations", "hospital_bed_information",
-    "hospital_quality_information")
+  private val tables = Map("hospitals" -> Schemas.hospitals,
+    "hospital_locations" -> Schemas.hospitalLocations,
+    "hospital_bed_information" -> Schemas.hospitalBedInformation,
+    "hospital_quality_information" -> Schemas.hospitalQualityInformation)
 
+  // the schema is given because a load that commits no rows can leave a
+  // table directory with no data file to infer one from
   private def rows(wh: String, table: String): Long =
-    if (Files.exists(Paths.get(s"$wh/$table"))) spark.read.parquet(s"$wh/$table").count() else 0L
+    if (Files.exists(Paths.get(s"$wh/$table")))
+      spark.read.schema(tables(table)).parquet(s"$wh/$table").count()
+    else 0L
 
-  private def counts(wh: String): Map[String, Long] = tables.map(t => t -> rows(wh, t)).toMap
+  private def counts(wh: String): Map[String, Long] = tables.keys.map(t => t -> rows(wh, t)).toMap
 
   /** Every file under `root`, relative to it, with its size. */
   private def files(root: String): Map[String, Long] = {
@@ -174,28 +180,80 @@ class LoadPassSpec extends SparkSpec {
     assert(counts(wh)("hospital_locations") == before("hospital_locations") + 5)
   }
 
-  test("re-running a committed load adds no rows to any table") {
-    val wh = s"$dir/rerun_wh"; val rej = s"$dir/rerun_rej"
-    val week1 = hhsFile("rerun_w1", "2023-01-06", (1 to 20).map(i => s"H$i"))._1
-    val week2 = hhsFile("rerun_w2", "2023-01-13", (5 to 25).map(i => s"H$i"))._1
-    val (quality, _) = qualityFile("rerun_q", (1 to 20).map(i => s"H$i"))
-    Cli.runHhs(spark, week1, wh, rej)
-    Cli.runHhs(spark, week2, wh, rej)
-    Cli.runQuality(spark, "2023-07-01", quality, wh, rej)
+  /** Load two weeks and a quality file into the warehouse at local path
+    * `wh`, given to the loaders as `whGiven`, then load them again. */
+  private def rerun(name: String, wh: String, whGiven: String, rej: String): Unit = {
+    val week1 = hhsFile(s"${name}_w1", "2023-01-06", (1 to 20).map(i => s"H$i"))._1
+    val week2 = hhsFile(s"${name}_w2", "2023-01-13", (5 to 25).map(i => s"H$i"))._1
+    val (quality, _) = qualityFile(s"${name}_q", (1 to 20).map(i => s"H$i"))
+    Cli.runHhs(spark, week1, whGiven, rej)
+    Cli.runHhs(spark, week2, whGiven, rej)
+    Cli.runQuality(spark, "2023-07-01", quality, whGiven, rej)
     val committed = counts(wh)
     assert(committed == Map("hospitals" -> 25L, "hospital_locations" -> 25L,
       "hospital_bed_information" -> 41L, "hospital_quality_information" -> 20L), s"$committed")
 
-    Cli.runHhs(spark, week2, wh, rej)
-    Cli.runHhs(spark, week1, wh, rej)
-    Cli.runQuality(spark, "2023-07-01", quality, wh, rej)
+    Cli.runHhs(spark, week2, whGiven, rej)
+    Cli.runHhs(spark, week1, whGiven, rej)
+    Cli.runQuality(spark, "2023-07-01", quality, whGiven, rej)
     assert(counts(wh) == committed)
     assert(!Files.exists(Paths.get(s"$wh/${LoadWriter.StagingDir}")))
+  }
+
+  test("re-running a committed load adds no rows to any table") {
+    val wh = s"$dir/rerun_wh"; val rej = s"$dir/rerun_rej"
+    rerun("rerun", wh, wh, rej)
     // each reject directory holds its latest load's rejects only
     def reasons(kind: String): Map[String, Long] =
       spark.read.option("header", "true").csv(s"$rej/$kind").groupBy("reject_reason").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(reasons("hhs").values.sum == 2L)
     assert(reasons("quality") == Map("rating_negative" -> 1L, "duplicate" -> 20L))
+  }
+
+  test("a re-run into a file:// warehouse adds no rows, and the report renders from it") {
+    // an existence check that reads the URI as a local path sees a fresh
+    // warehouse on every load, and the re-run appends every row again
+    val wh = s"$dir/uri_wh"
+    rerun("uri", wh, s"file://$wh", s"$dir/uri_rej")
+    val page = graft.cli.Report.render(spark, s"file://$wh")
+    assert(page.contains("Records loaded for week 2023-01-13"), page)
+    assert(page.contains("as of 2023-07-01"), page)
+  }
+
+  test("a header-only or zero-byte CSV commits no rows; a quality CSV without the CMS columns fails") {
+    val wh = s"$dir/degenerate_wh"; val rej = s"$dir/degenerate_rej"
+    def file(name: String, text: String): String = {
+      val p = dir.resolve(s"$name.csv"); Files.writeString(p, text); p.toString
+    }
+    val hhsHeaderOnly = file("degenerate_hhs_header", hhsHeader + "\n")
+    val hhsZeroByte = file("degenerate_hhs_empty", "")
+    val qualityHeaderOnly = file("degenerate_q_header",
+      "Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating\n")
+    def loadEmpties(): Unit = {
+      Cli.runHhs(spark, hhsHeaderOnly, wh, rej)
+      Cli.runHhs(spark, hhsZeroByte, wh, rej)
+      Cli.runQuality(spark, "2023-07-01", qualityHeaderOnly, wh, rej)
+    }
+
+    loadEmpties()
+    assert(counts(wh).values.forall(_ == 0L), s"${counts(wh)}")
+    // the empty loads leave nothing in the way of a real one
+    Cli.runHhs(spark, hhsFile("degenerate_w1", "2023-01-06", (1 to 20).map(i => s"H$i"))._1, wh, rej)
+    Cli.runQuality(spark, "2023-07-01", qualityFile("degenerate_q", (1 to 20).map(i => s"H$i"))._1, wh, rej)
+    val committed = counts(wh)
+    assert(committed == Map("hospitals" -> 20L, "hospital_locations" -> 20L,
+      "hospital_bed_information" -> 20L, "hospital_quality_information" -> 20L), s"$committed")
+    loadEmpties()
+    assert(counts(wh) == committed)
+
+    val live = files(wh)
+    for (bad <- Seq(file("degenerate_q_empty", ""), hhsHeaderOnly)) {
+      val e = intercept[IllegalArgumentException](Cli.runQuality(spark, "2023-07-01", bad, wh, rej))
+      assert(e.getMessage.contains(bad) && e.getMessage.contains("'Facility ID'") &&
+        e.getMessage.contains("'Hospital overall rating'"), e.getMessage)
+      assert(files(wh) == live)
+      assert(!Files.exists(Paths.get(s"$wh/${LoadWriter.StagingDir}")))
+    }
   }
 }
